@@ -874,6 +874,12 @@ def tfidf_shingle_cosine_pairs(
     index form). Output: ``(doc_a, doc_b, n_shared, cosine)`` for pairs
     at or above ``threshold``, ids ascending within the pair.
 
+    ``id_col`` must be unique per input row (the contract the oracle
+    assumes). Term frequencies are computed inside each row, so two rows
+    sharing an id become two separate postings for one doc: tf is split
+    across them, norms and cosines are distorted, and a ``doc_a ==
+    doc_b`` pair can appear. Aggregate duplicate ids before calling.
+
     Scale shape (the ``jaccard_pairs`` inverted-index idiom): the
     postings index is built ONCE — (doc, xxhash64(shingle), tf) with the
     8-byte hash replacing the ~4-word string in every shuffle — grouped

@@ -121,12 +121,13 @@ def global_row_number(
        the SAME rows in the SAME positions — without it a re-sample
        between jobs could shift rows across partitions and corrupt the
        offsets.
-    2. LOCAL row number read off ``monotonically_increasing_id()`` over
-       the pinned sorted scan ((partition << 33) + row offset — parallel,
-       no global sort, and no WindowExec: a window partitioned by
-       ``spark_partition_id()`` re-shuffles the frame, because the
-       checkpoint scan's UnknownPartitioning can't prove the clustering
-       it has by construction).
+    2. LOCAL row number read off the low 33 bits (the row offset) of
+       ``monotonically_increasing_id()`` over the pinned sorted scan,
+       keyed by ``spark_partition_id()`` (parallel, no global sort, and
+       no WindowExec: a window partitioned by ``spark_partition_id()``
+       re-shuffles the frame, because the checkpoint scan's
+       UnknownPartitioning can't prove the clustering it has by
+       construction).
     3. One bounded collect of per-partition counts (one long per range
        partition) -> cumulative offsets, broadcast-joined back; global
        row number = local row number + partition offset.
@@ -173,21 +174,21 @@ def _global_row_number_with_total(
     # Bounds: ids are (pid << 33) | offset, so this holds to 2^33 rows
     # per range partition — STRICTLY WIDER than the window form it
     # replaces (row_number is a 32-bit int, 2^31 rows per partition).
+    # __pid comes from spark_partition_id(), the same expression the
+    # offsets pass groups on, so the join key never depends on the id's
+    # bit layout; the id supplies only the low-33-bit row offset.
     part = (
         df.repartitionByRange(n, *order_by)
         .sortWithinPartitions(*order_by)
         .localCheckpoint(eager=False)
     )
     local = (
-        part.withColumn("__mid", F.monotonically_increasing_id())
-        .withColumn(
-            "__pid", F.shiftrightunsigned(F.col("__mid"), 33).cast("int")
-        )
+        part.withColumn("__pid", F.spark_partition_id())
         .withColumn(
             "__lrn",
-            F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1),
+            F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+            + F.lit(1),
         )
-        .drop("__mid")
     )
     counts = dict(
         part.groupBy(F.spark_partition_id().alias("__pid"))
@@ -196,8 +197,15 @@ def _global_row_number_with_total(
     )  # bounded: one row per range partition
     offsets, acc = [], 0
     for pid in range(n):
+        c = counts.get(pid, 0)
+        if c > 1 << 33:
+            raise ValueError(
+                f"range partition {pid} holds {c} rows, above the 2^33 "
+                "row-offset field of monotonically_increasing_id; raise "
+                "num_partitions"
+            )
         offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
+        acc += c
     off = F.broadcast(
         spark.createDataFrame(offsets, schema="__pid int, __off long")
     )

@@ -188,7 +188,12 @@ def bronze_to_silver(
     persisted = None
     if zone_exists(spark, cfg.silver_path):
         # persist: the transformed batch is consumed twice (touched-key
-        # collect + the write) — without this the bronze scan re-runs
+        # collect + the write) — without this the bronze scan re-runs.
+        # The cached batch's dedup shuffle is coalesced by AQE
+        # (session.DEFAULT_CONF canChangeCachedPlanOutputPartitioning), so
+        # the append writes AQE-sized files (one per touched partition for
+        # a small delivery), not one per static shuffle partition per
+        # touched partition
         persisted = silver.persist()
         silver = dedup_against_silver(persisted, cfg.silver_path)
 

@@ -5,6 +5,7 @@ values asserted against DuckDB recomputation; idempotency on re-run."""
 from __future__ import annotations
 
 import json
+import pathlib
 
 import duckdb
 import pytest
@@ -138,6 +139,102 @@ def test_pipeline_idempotent_rerun(spark, cfg):
     res2 = run_pipeline(spark, cfg, clock=clock)  # same input re-delivered
     assert res2["bronze_to_silver"]["rows_written"] == 0
     assert spark.read.parquet(cfg.silver_path).count() == first
+
+
+def _delivery(path, ids, days):
+    """One bronze delivery: transaction ``ids`` spread round-robin over
+    ``days`` of March 2024 (a re-delivered id keeps its original day, so
+    it lands in the partition it was first written to)."""
+    path.mkdir()
+    path.joinpath("part.json").write_text(
+        "\n".join(
+            json.dumps(
+                {
+                    "transaction_id": f"txn_{i:08d}",
+                    "customer_id": f"cust_{i % 40:06d}",
+                    "amount": round(10 + (i * 37.77) % 4990, 2),
+                    "transaction_date": f"2024-03-{days[i % len(days)]:02d} "
+                    f"10:{i % 60:02d}:00",
+                    "transaction_type": "purchase",
+                    "merchant_id": f"merchant_{i % 5:03d}",
+                    "payment_method": "credit_card",
+                    "currency": "USD",
+                    "status": "completed",
+                    "category": "books",
+                }
+            )
+            for i in ids
+        )
+    )
+    return str(path)
+
+
+def _files_per_partition(silver_path) -> dict[tuple[int, int, int], set]:
+    """{(year, month, day): {parquet file names}} of a silver zone."""
+    out: dict[tuple[int, int, int], set] = {}
+    for f in pathlib.Path(silver_path).glob("year=*/month=*/day=*/*.parquet"):
+        key = tuple(int(p.split("=")[1]) for p in f.parts[-4:-1])
+        out.setdefault(key, set()).add(f.name)
+    return out
+
+
+def _new_files(before, after) -> dict[tuple[int, int, int], int]:
+    return {
+        k: len(v - before.get(k, set()))
+        for k, v in after.items()
+        if v - before.get(k, set())
+    }
+
+
+@pytest.mark.parametrize("ingest", ["bronze_to_silver", "ingest_sink"])
+def test_second_delivery_writes_one_file_per_touched_partition(
+    spark, tmp_path, ingest
+):
+    """A delivery into a NON-EMPTY silver zone persists the transformed
+    batch for the re-delivery anti-join — in the batch ingest and in the
+    streaming foreachBatch sink (``anti_join`` mode, driven directly with
+    the micro-batches a stream would hand over). AQE must coalesce that
+    cached batch like any other plan: the append writes one parquet file
+    per touched (year, month, day) partition, not one per static shuffle
+    partition (the session's 8 here, 32 by default) per touched partition."""
+    from aws_data_pipeline_spark.catalog import TXN_SCHEMA
+    from aws_data_pipeline_spark.pipeline.medallion import bronze_to_silver
+    from aws_data_pipeline_spark.streaming.ingest import ingest_sink
+
+    clock = F.lit(CLOCK).cast("timestamp")
+    days = (1, 2, 3)
+    silver = str(tmp_path / "silver")
+
+    def deliver(batch_id, ids):
+        bronze = _delivery(tmp_path / f"d{batch_id}", ids, days)
+        if ingest == "ingest_sink":
+            batch = spark.read.schema(TXN_SCHEMA).json(bronze)
+            ingest_sink(batch, batch_id, silver, clock, "anti_join")
+            return
+        cfg = PipelineConfig(
+            bronze_path=bronze,
+            silver_path=silver,
+            gold_path=str(tmp_path / "gold"),
+            backoff_seconds=0.01,
+        )
+        return bronze_to_silver(spark, cfg, clock=clock)["rows_written"]
+
+    written = [deliver(0, range(300))]
+    before = _files_per_partition(silver)
+
+    # 300 new ids plus 60 re-delivered ones, over the same three days
+    second = list(range(300, 600)) + list(range(0, 300, 5))
+    written.append(deliver(1, second))
+    after = _files_per_partition(silver)
+    assert _new_files(before, after) == {(2024, 3, d): 1 for d in days}
+    assert spark.read.parquet(silver).count() == 600
+
+    # re-delivering the second batch is a no-op: no rows, no files
+    written.append(deliver(2, second))
+    assert _files_per_partition(silver) == after
+    assert spark.read.parquet(silver).count() == 600
+    if ingest == "bronze_to_silver":  # the QC observation agrees
+        assert written == [300, 300, 0]
 
 
 def test_retry_and_failure_notification(spark, tmp_path):
