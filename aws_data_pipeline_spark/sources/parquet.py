@@ -328,47 +328,41 @@ def commit_index_version(spark: SparkSession, path: str, version: int) -> None:
     _create_marker(spark, f"{path}/{_PTR_DIR}", version)
 
 
-def zone_bucket_count(spark: SparkSession, path: str) -> int | None:
-    """Recorded hash-bucket fan-out of a ``bucket=``-partitioned zone
-    (``path/_buckets/<N>`` marker, written BEFORE the first data file), or
-    None for an unbucketed legacy zone. The marker — not the caller's
-    parameter — is the source of truth on every later append/read: a
-    pruned anti-join computed under a DIFFERENT modulus than the data was
-    written with would silently miss rows and re-admit duplicates."""
-    return _max_numeric_marker(spark, f"{path}/{_BUCKETS_DIR}")
-
-
-def record_zone_bucket_count(spark: SparkSession, path: str, n: int) -> None:
-    """Record the bucket fan-out for a new zone. Written before the first
-    data write: a crash in between leaves a data-free zone whose marker
-    simply gets reused (re-recording the same N is a no-op)."""
-    _create_marker(spark, f"{path}/{_BUCKETS_DIR}", n)
+def require_flat_zone(spark: SparkSession, path: str) -> None:
+    """Refuse a zone written by the older hive-bucketed corpus layout
+    (``bucket=<i>/`` directories, fan-out in a ``path/_buckets`` marker).
+    The corpus ingests append flat files, and Spark's partition
+    discovery silently skips flat files sitting beside ``k=v``
+    directories — a mixed zone would hide rows from every read, including
+    the idempotency anti-join. Raises ``ValueError`` so the caller stops
+    before any write; rewrite such a zone flat (read it, drop ``bucket``,
+    overwrite a fresh path) before pointing an ingest at it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{_BUCKETS_DIR}")
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        raise ValueError(
+            f"{path!r} is a bucket-partitioned zone (has {_BUCKETS_DIR}/); "
+            "rewrite it flat before using it as a corpus zone"
+        )
 
 
 def pruned_zone_ids(
-    spark, path: str, batch: DataFrame, n_buckets: int | None, id_col: str
+    spark: SparkSession, path: str, batch: DataFrame, id_col: str
 ) -> DataFrame:
-    """A ``bucket=``-partitioned zone's id column restricted — by
-    PARTITION PRUNING — to the hash buckets this batch's ids land in.
-    This is what keeps a per-batch idempotency anti-join O(batch), not
-    O(zone): the literal ``bucket IN (...)`` disjunction resolves to
-    PartitionFilters, so a batch touching 4 of 1024 buckets lists and
-    scans 4/1024 of the zone's id column — the partition-pruned silver
-    pattern (:func:`read_partition_slice`) applied to an id-keyed zone.
-    Legacy unbucketed zones (``n_buckets`` None) fall back to the full
-    column-pruned id scan."""
-    ids = spark.read.parquet(path)
-    if n_buckets is None:
-        return ids.select(id_col)
-    bkts = sorted(
-        int(r.b)
-        for r in batch.select(
-            F.pmod(F.col(id_col), F.lit(n_buckets)).alias("b")
-        )
-        .distinct()
-        .collect()
-    )
-    return ids.filter(F.col("bucket").isin(bkts)).select(id_col)
+    """A flat id-keyed zone's ``id_col`` restricted to the batch's
+    ``[min, max]`` id range — the read side of a per-batch idempotency
+    anti-join or batch ∩ zone semi-join. One small aggregate action
+    fetches the bounds; the literal range then pushes down to the parquet
+    scan (``PushedFilters``), where row-group min/max statistics skip
+    every other batch's row groups. Ingest ids arrive ordered, so each
+    batch's file covers a disjoint id range and the data read stays
+    O(batch) however large the zone grows (each file's footer is still
+    opened; :func:`compact_zone` keeps the file count down). An empty
+    batch yields an empty frame."""
+    lo, hi = batch.agg(F.min(id_col), F.max(id_col)).first()
+    ids = spark.read.parquet(path).select(id_col)
+    if lo is None:
+        return ids.limit(0)
+    return ids.filter(F.col(id_col).between(lo, hi))
 
 
 def index_has(spark: SparkSession, path: str, sub: str) -> bool:

@@ -7,8 +7,11 @@ micro-batch is deduplicated WITHIN itself, then probed against the index of
 everything already accepted; only novel documents append to the corpus zone
 AND to the index — LSM-style maintenance where per-batch cost is O(batch +
 matched buckets) and the accepted corpus is never re-read, let alone
-re-clustered. The checkpoint is the bookmark (same contract as
-streaming/ingest.py): a crashed run re-processes only uncommitted files.
+re-clustered. The corpus zone is flat: each micro-batch appends one parquet
+file, and the idempotency anti-join reads only the batch's id range of it
+(:func:`sources.parquet.pruned_zone_ids`). The checkpoint is the bookmark
+(same contract as streaming/ingest.py): a crashed run re-processes only
+uncommitted files.
 
 Crash-consistency note, explicit because the sink performs THREE writes
 (corpus, index sets, index bands) that parquet cannot commit atomically
@@ -35,8 +38,7 @@ from aws_data_pipeline_spark.operators import dedup, text
 from aws_data_pipeline_spark.sources.parquet import (
     index_has,
     pruned_zone_ids,
-    record_zone_bucket_count,
-    zone_bucket_count,
+    require_flat_zone,
     zone_exists,
 )
 
@@ -178,7 +180,6 @@ def incremental_corpus_ingest(
     bands: int = 4,
     kgram_index_path: str | None = None,
     kgram_k: int = 8,
-    corpus_buckets: int = 64,
     strip_markup: bool = False,
     min_quality: float | None = None,
     gc_superseded_versions: bool = False,
@@ -208,16 +209,17 @@ def incremental_corpus_ingest(
     doc_ids must be globally unique across batches (upstream contract,
     same as any append-only ingest).
 
-    ``corpus_buckets``: new corpus zones are written hive-partitioned by
-    ``bucket = pmod(doc_id, corpus_buckets)`` with the fan-out recorded
-    in a ``_buckets`` marker BEFORE the first data file — the embedding
-    loop's layout (:func:`streaming.embeddings.incremental_embedding_ingest`),
-    verbatim. Every later run's idempotency anti-join and batch ∩ corpus
-    semi-join then prune to the batch's buckets (PartitionFilters via
-    :func:`sources.parquet.pruned_zone_ids`), keeping per-batch corpus
-    reads O(batch) instead of O(corpus) at 100 TB. The recorded marker,
-    not this parameter, governs existing zones; legacy unbucketed zones
-    keep working with full column-pruned id scans.
+    Corpus layout: each micro-batch appends ONE flat parquet file to
+    ``corpus_path`` — the embedding loop's layout
+    (:func:`streaming.embeddings.incremental_embedding_ingest`). The
+    idempotency anti-join and the k-gram batch ∩ corpus semi-join read
+    the zone's ids through :func:`sources.parquet.pruned_zone_ids`: the
+    batch's ``[min, max]`` doc_id pushes down to the scan, and row-group
+    statistics skip other batches' files, so the per-batch corpus read
+    stays O(batch) for ordered ids. A zone written by the older
+    hash-bucketed layout (``_buckets`` marker) is refused with
+    ``ValueError`` before any write: partition discovery would silently
+    hide flat files appended beside its ``bucket=`` directories.
 
     ``strip_markup`` / ``min_quality`` (optional, off by default): the
     curate() chain's row-local stage 0/1 applied per micro-batch BEFORE
@@ -263,14 +265,6 @@ def incremental_corpus_ingest(
         # would compute it a second time just to answer the guard)
         if min_quality is not None and batch.isEmpty():
             return
-        # bucket fan-out: the zone's own recorded marker is the source of
-        # truth (a modulus mismatch would silently break the pruned
-        # anti-join); a brand-new zone records the caller's fan-out
-        # BEFORE any data lands, legacy unbucketed zones stay unbucketed
-        nb = zone_bucket_count(sess, corpus_path)
-        if nb is None and not zone_exists(sess, corpus_path):
-            record_zone_bucket_count(sess, corpus_path, corpus_buckets)
-            nb = corpus_buckets
         # 1. in-batch dedup: exact digest first (cheap), then fuzzy
         exact = dedup.exact_dedup(batch, "doc_id")
         uniq = exact.filter(~F.col("is_duplicate")).drop(
@@ -284,37 +278,31 @@ def incremental_corpus_ingest(
             assign.filter(~F.col("is_duplicate")).select("doc_id"),
             "doc_id",
             "left_semi",
-        ).localCheckpoint()
+        ).localCheckpoint()  # one plan, several probes
         # 2. cross-batch: probe the index of everything accepted so far
         if index_has(sess, index_path, "meta"):
             matched = dedup.neardup_against_index(
                 sess, survivors, index_path, threshold=threshold
             ).select(F.col("new_id").alias("doc_id")).distinct()
-            survivors = survivors.join(matched, "doc_id", "left_anti")
+            survivors = survivors.join(
+                matched, "doc_id", "left_anti"
+            ).localCheckpoint()
         # 3. idempotent append: corpus and index append sets are derived
         #    INDEPENDENTLY (each anti-joined against its OWN target), so a
         #    crash between any of the three writes is backfilled by the
         #    recovery run instead of permanently desynchronizing them
         #    (module docstring).
-        survivors = survivors.localCheckpoint()  # one plan, several probes
         if not survivors.isEmpty():
             corpus_new = survivors
             if zone_exists(sess, corpus_path):
-                # partition-pruned idempotency: only the batch's buckets
-                # are listed/scanned, never the whole corpus id column
+                # range-pruned idempotency: only the batch's id range of
+                # the corpus id column is read
                 existing = pruned_zone_ids(
-                    sess, corpus_path, survivors, nb, "doc_id"
+                    sess, corpus_path, survivors, "doc_id"
                 )
                 corpus_new = survivors.join(existing, "doc_id", "left_anti")
             if not corpus_new.isEmpty():
-                if nb is not None:
-                    corpus_new.withColumn(
-                        "bucket", F.pmod(F.col("doc_id"), F.lit(nb))
-                    ).write.mode("append").partitionBy("bucket").parquet(
-                        corpus_path
-                    )
-                else:
-                    corpus_new.write.mode("append").parquet(corpus_path)
+                corpus_new.write.mode("append").parquet(corpus_path)
             if index_has(sess, index_path, "meta"):
                 append_to_lsh_text_index(survivors, index_path)
             else:
@@ -340,9 +328,8 @@ def incremental_corpus_ingest(
         # idempotent. Runs OUTSIDE the survivors guard for that reason.
         if kgram_index_path is not None and zone_exists(sess, corpus_path):
             accepted = uniq.join(
-                # same bucket pruning as the corpus anti-join: the
-                # semi-join's corpus side reads only the batch's buckets
-                pruned_zone_ids(sess, corpus_path, uniq, nb, "doc_id"),
+                # same range pruning as the corpus anti-join
+                pruned_zone_ids(sess, corpus_path, uniq, "doc_id"),
                 "doc_id",
                 "left_semi",
             )
@@ -361,6 +348,7 @@ def incremental_corpus_ingest(
                 if not full.isEmpty():
                     dedup.build_kgram_index(full, kgram_index_path, k=kgram_k)
 
+    require_flat_zone(spark, corpus_path)
     # run-START version GC (the embedding loop's cadence rule — see its
     # comment for why collecting right after a rebuild would be wrong)
     if gc_superseded_versions:
@@ -401,8 +389,10 @@ def forget_documents(
     maintains — the document twin of
     :func:`streaming.embeddings.forget_vectors`: remove ``ids`` from the
     MinHash-LSH index, rebuild the k-gram span index from the SURVIVING
-    corpus, erase the bucketed corpus zone last, and collect the
-    superseded index generations (they still hold the doomed rows).
+    corpus, rewrite the flat corpus zone last, and collect the
+    superseded index generations (they still hold the doomed rows). A
+    hash-bucketed corpus zone (``_buckets`` marker) is refused with
+    ``ValueError`` before anything is erased.
 
     The k-gram index stores DISTINCT hashes with no per-document
     provenance (that anonymity is its size story — see
@@ -419,14 +409,12 @@ def forget_documents(
     Returns per-surface removed-row counts (``kgram_rebuilt`` reports the
     surviving-document count fed to the rebuild) for the erasure audit."""
     from aws_data_pipeline_spark.sources.parquet import (
-        delete_from_zone,
         gc_index_versions,
-        index_has,
         index_root,
-        zone_bucket_count,
-        zone_exists,
     )
 
+    if corpus_path is not None:
+        require_flat_zone(spark, corpus_path)
     out: dict[str, int] = {}
     doomed = ids.select(F.col(id_col).alias("doc_id")).distinct()
     if index_path is not None and index_has(spark, index_path, "sets"):
@@ -456,30 +444,14 @@ def forget_documents(
         )
         out["kgram_rebuilt"] = survivors.count()
     if corpus_path is not None and zone_exists(spark, corpus_path):
-        nb = zone_bucket_count(spark, corpus_path)
-        if nb is not None:
-            keyed = doomed.withColumn(
-                "bucket", F.pmod(F.col("doc_id"), F.lit(nb)).cast("int")
-            )
-            n = (
-                spark.read.parquet(corpus_path)
-                .select("doc_id")
-                .join(doomed, "doc_id", "left_semi")
-                .count()
-            )
-            delete_from_zone(
-                spark, corpus_path, keyed,
-                key_cols=["doc_id"], partition_cols=["bucket"],
-            )
-            out["corpus"] = n
-        else:  # legacy unbucketed zone: one-partition COW rewrite
-            cur = spark.read.parquet(corpus_path)
-            surv = cur.join(doomed, "doc_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            out["corpus"] = cur.count() - surv.count()
-            if out["corpus"] > 0:
-                surv.write.mode("overwrite").parquet(corpus_path)
+        # copy-on-write rewrite of the flat zone
+        cur = spark.read.parquet(corpus_path)
+        surv = cur.join(doomed, "doc_id", "left_anti").localCheckpoint(
+            eager=True
+        )
+        out["corpus"] = cur.count() - surv.count()
+        if out["corpus"] > 0:
+            surv.write.mode("overwrite").parquet(corpus_path)
     if gc_superseded:
         for p, subs in (
             (index_path, ("sets", "bands", "meta")),

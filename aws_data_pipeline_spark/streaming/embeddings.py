@@ -12,6 +12,9 @@ FIXED build centroids/codebooks; :func:`operators.similarity.ivf_retrain_due`
 and :func:`operators.similarity.pq_retrain_due` tell the owner when drift or
 growth warrants a rebuild). Per-batch cost is O(batch × bands +
 matched candidates); accepted vectors are never re-banded or re-paired.
+The vector corpus zone is flat, one parquet file per micro-batch, and its
+id reads are pruned to the batch's id range
+(:func:`sources.parquet.pruned_zone_ids`), as in the text loop.
 
 Crash-consistency contract is the text loop's, verbatim: every append set is
 derived INDEPENDENTLY by anti-joining the batch against what THAT target
@@ -35,8 +38,8 @@ from pyspark.sql import types as T
 from aws_data_pipeline_spark.operators import dedup, similarity
 from aws_data_pipeline_spark.sources.parquet import (
     index_has,
-    record_zone_bucket_count,
-    zone_bucket_count,
+    pruned_zone_ids,
+    require_flat_zone,
     zone_exists,
 )
 
@@ -46,16 +49,6 @@ VEC_SCHEMA = T.StructType(
         T.StructField("embedding", T.ArrayType(T.FloatType())),
     ]
 )
-
-
-def _pruned_corpus_ids(sess, corpus_path: str, batch: DataFrame, n_buckets):
-    """The vector corpus zone's id column restricted — by PARTITION
-    PRUNING — to the hash buckets this batch's vec_ids land in (see
-    :func:`sources.parquet.pruned_zone_ids`, shared with the text loop):
-    the per-batch idempotency anti-join stays O(batch), not O(corpus)."""
-    from aws_data_pipeline_spark.sources.parquet import pruned_zone_ids
-
-    return pruned_zone_ids(sess, corpus_path, batch, n_buckets, "vec_id")
 
 
 def incremental_embedding_ingest(
@@ -74,7 +67,6 @@ def incremental_embedding_ingest(
     pq_ks: int = 16,
     pq_seed: int = 42,
     pq_max_train: int = 16384,
-    corpus_buckets: int = 64,
     sq8_index_path: str | None = None,
     sq8_retrain: bool = False,
     ivfpq_cell_codes_path: str | None = None,
@@ -100,15 +92,16 @@ def incremental_embedding_ingest(
     vec_ids must be globally unique across batches (upstream contract,
     same as the text loop's doc_ids).
 
-    ``corpus_buckets``: new corpus zones are written hive-partitioned by
-    ``bucket = pmod(vec_id, corpus_buckets)`` with the fan-out recorded
-    in a ``_buckets`` marker BEFORE the first data file. Every later
-    run's idempotency anti-join and batch ∩ corpus semi-join then prune
-    to the batch's buckets (PartitionFilters — see
-    :func:`_pruned_corpus_ids`), keeping per-batch corpus reads O(batch)
-    instead of O(corpus) at 100 TB. The recorded marker, not this
-    parameter, governs existing zones; legacy unbucketed zones keep
-    working with full column-pruned id scans.
+    Corpus layout: each micro-batch appends ONE flat parquet file to
+    ``corpus_path``. The idempotency anti-join and the batch ∩ corpus
+    semi-join read the zone's ids through
+    :func:`sources.parquet.pruned_zone_ids`: the batch's ``[min, max]``
+    vec_id pushes down to the scan, and row-group statistics skip other
+    batches' files, so the per-batch corpus read stays O(batch) for
+    ordered ids. A zone written by the older hash-bucketed layout
+    (``_buckets`` marker) is refused with ``ValueError`` before any
+    write: partition discovery would silently hide flat files appended
+    beside its ``bucket=`` directories.
 
     ``pq_index_path`` extends the same upkeep to the PQ index (the third
     embedding index family): appends encode under the index's STORED
@@ -156,14 +149,6 @@ def incremental_embedding_ingest(
             return
         sess = batch.sparkSession
         batch = batch.localCheckpoint()
-        # bucket fan-out: the zone's own recorded marker is the source of
-        # truth (a modulus mismatch would silently break the pruned
-        # anti-join); a brand-new zone records the caller's fan-out
-        # BEFORE any data lands, legacy unbucketed zones stay unbucketed
-        nb = zone_bucket_count(sess, corpus_path)
-        if nb is None and not zone_exists(sess, corpus_path):
-            record_zone_bucket_count(sess, corpus_path, corpus_buckets)
-            nb = corpus_buckets
         # 1. in-batch dedup: exact id, then semantic components
         uniq = batch.dropDuplicates(["vec_id"])
         pairs = similarity.neardup_pairs_lsh(uniq, threshold=threshold).select(
@@ -184,27 +169,21 @@ def incremental_embedding_ingest(
                 .select(F.col("new_id").alias("vec_id"))
                 .distinct()
             )
-            survivors = survivors.join(matched, "vec_id", "left_anti")
+            survivors = survivors.join(
+                matched, "vec_id", "left_anti"
+            ).localCheckpoint()
         # 3. idempotent appends (independent anti-joins per target)
-        survivors = survivors.localCheckpoint()
         if not survivors.isEmpty():
             corpus_new = survivors
             if zone_exists(sess, corpus_path):
-                # partition-pruned idempotency: only the batch's buckets
-                # are listed/scanned, never the whole corpus id column
-                existing = _pruned_corpus_ids(sess, corpus_path, survivors, nb)
+                # range-pruned idempotency: only the batch's id range of
+                # the corpus id column is read
+                existing = pruned_zone_ids(
+                    sess, corpus_path, survivors, "vec_id"
+                )
                 corpus_new = survivors.join(existing, "vec_id", "left_anti")
             if not corpus_new.isEmpty():
-                w = corpus_new
-                if nb is not None:
-                    w = w.withColumn(
-                        "bucket", F.pmod(F.col("vec_id"), F.lit(nb))
-                    )
-                    w.write.mode("append").partitionBy("bucket").parquet(
-                        corpus_path
-                    )
-                else:
-                    w.write.mode("append").parquet(corpus_path)
+                corpus_new.write.mode("append").parquet(corpus_path)
             if index_has(sess, index_path, "meta"):
                 similarity.append_to_embedding_lsh_index(survivors, index_path)
             else:
@@ -233,10 +212,8 @@ def incremental_embedding_ingest(
             uniq_batch = batch.dropDuplicates(["vec_id"])
             accepted = (
                 uniq_batch.join(
-                    # same bucket pruning as the corpus anti-join: the
-                    # semi-join's corpus side reads only the batch's
-                    # bucket partitions
-                    _pruned_corpus_ids(sess, corpus_path, uniq_batch, nb),
+                    # same range pruning as the corpus anti-join
+                    pruned_zone_ids(sess, corpus_path, uniq_batch, "vec_id"),
                     "vec_id",
                     "left_semi",
                 )
@@ -291,6 +268,7 @@ def incremental_embedding_ingest(
                         max_train=pq_max_train,
                     )
 
+    require_flat_zone(spark, corpus_path)
     # version GC runs at the START of a run, never right after this run's
     # own retrains: finish_index_build deliberately keeps the
     # immediately-superseded generation for readers that resolved their
@@ -378,7 +356,7 @@ def forget_vectors(
     gc_superseded: bool = True,
 ) -> dict[str, int]:
     """GDPR-style erasure across the WHOLE embedding estate the ingest
-    loop maintains: remove ``ids`` from the bucketed corpus zone and from
+    loop maintains: remove ``ids`` from the flat corpus zone and from
     every persisted index family, refresh the derived cell-codes layout
     (which still CONTAINS the erased codes until rebuilt — for erasure
     the rebuild is mandatory, not a freshness nicety), and — by default —
@@ -398,23 +376,19 @@ def forget_vectors(
     idempotent (anti-joins / partition-pruned rewrites of absent ids are
     no-ops), so a crash anywhere re-runs to completion.
 
-    Corpus-zone pruning: the zone is hive-partitioned by
-    ``bucket = pmod(vec_id, N)`` (fan-out from the zone's ``_buckets``
-    marker), so each doomed id names its partition arithmetically — the
-    rewrite touches O(buckets hit), never the full zone; a legacy
-    unbucketed zone falls back to a single-partition rewrite.
+    The corpus zone is rewritten copy-on-write, and only when a doomed
+    id is present. A hash-bucketed corpus zone (``_buckets`` marker) is
+    refused with ``ValueError`` before anything is erased.
 
     Returns per-surface deleted-row counts for the erasure audit log."""
     from aws_data_pipeline_spark.sources.parquet import (
-        delete_from_zone,
         gc_index_versions,
-        index_has,
         index_root,
         qualified_path,
-        zone_bucket_count,
-        zone_exists,
     )
 
+    if corpus_path is not None:
+        require_flat_zone(spark, corpus_path)
     out: dict[str, int] = {}
     doomed = ids.select(F.col(id_col).alias("vec_id")).distinct()
     if index_path is not None and index_has(spark, index_path, "vectors"):
@@ -485,28 +459,12 @@ def forget_vectors(
             if p is not None and zone_exists(spark, p):
                 gc_index_versions(spark, p, subs)
     if corpus_path is not None and zone_exists(spark, corpus_path):
-        nb = zone_bucket_count(spark, corpus_path)
-        if nb is not None:
-            keyed = doomed.withColumn(
-                "bucket", F.pmod(F.col("vec_id"), F.lit(nb)).cast("int")
-            )
-            n = (
-                spark.read.parquet(corpus_path)
-                .select("vec_id")
-                .join(doomed, "vec_id", "left_semi")
-                .count()
-            )
-            delete_from_zone(
-                spark, corpus_path, keyed,
-                key_cols=["vec_id"], partition_cols=["bucket"],
-            )
-            out["corpus"] = n
-        else:  # legacy unbucketed zone: one-partition COW rewrite
-            cur = spark.read.parquet(corpus_path)
-            surv = cur.join(doomed, "vec_id", "left_anti").localCheckpoint(
-                eager=True
-            )
-            out["corpus"] = cur.count() - surv.count()
-            if out["corpus"] > 0:
-                surv.write.mode("overwrite").parquet(corpus_path)
+        # copy-on-write rewrite of the flat zone
+        cur = spark.read.parquet(corpus_path)
+        surv = cur.join(doomed, "vec_id", "left_anti").localCheckpoint(
+            eager=True
+        )
+        out["corpus"] = cur.count() - surv.count()
+        if out["corpus"] > 0:
+            surv.write.mode("overwrite").parquet(corpus_path)
     return out

@@ -1567,10 +1567,7 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     import os
 
     from aws_data_pipeline_spark.operators import similarity as S
-    from aws_data_pipeline_spark.sources.parquet import (
-        index_root,
-        record_zone_bucket_count,
-    )
+    from aws_data_pipeline_spark.sources.parquet import index_root
     from aws_data_pipeline_spark.streaming.embeddings import forget_vectors
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1581,10 +1578,7 @@ def test_forget_vectors_erases_every_surface(spark, sf_dir, tmp_path):
     corpus = f"{base}/corpus"
     lsh, ivf, pq, sq8 = (f"{base}/{x}" for x in ("lsh", "ivf", "pq", "sq8"))
     cc = f"{base}/cell_codes"
-    record_zone_bucket_count(spark, corpus, 8)
-    e.withColumn("bucket", F.pmod("vec_id", F.lit(8)).cast("int")).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(corpus)
+    e.write.mode("append").parquet(corpus)
     S.build_embedding_lsh_index(e, lsh)
     S.build_ivf_index(e, ivf, n_cells=8)
     S.build_pq_index(e, pq)
@@ -1860,10 +1854,10 @@ def test_ivf_payload_filtered_search_and_lifecycle(spark, sf_dir, tmp_path):
         S.ivf_topk_indexed(spark, queries, bare, k=5, where="label = 2")
 
 
-def test_forget_vectors_legacy_zone_and_ambiguous_layout(spark, sf_dir, tmp_path):
-    """Branch coverage for the erasure composition: (a) a LEGACY
-    unbucketed corpus zone falls back to the one-partition COW rewrite
-    (correct counts, survivors intact); (b) with BOTH a PQ and an SQ8
+def test_forget_vectors_flat_zone_and_ambiguous_layout(spark, sf_dir, tmp_path):
+    """Branch coverage for the erasure composition: (a) the flat corpus
+    zone is rewritten copy-on-write (correct counts with an absent id,
+    survivors intact, a repeat writes nothing); (b) with BOTH a PQ and an SQ8
     candidate and a cell-codes layout whose meta is missing (half-built),
     forget_vectors refuses with the explicit-rebuild error instead of
     guessing a codes source."""
@@ -1875,7 +1869,7 @@ def test_forget_vectors_legacy_zone_and_ambiguous_layout(spark, sf_dir, tmp_path
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    corpus = str(tmp_path / "legacy_corpus")  # no _buckets marker
+    corpus = str(tmp_path / "flat_corpus")
     e.write.mode("overwrite").parquet(corpus)
     doomed = spark.createDataFrame([(1,), (2,), (9999,)], "vec_id long")
     out = forget_vectors(spark, doomed, corpus_path=corpus)

@@ -467,19 +467,22 @@ def test_pq_codes_shrink_scan_payload(spark, sf_dir, tmp_path):
     assert b(codes_p) < 0.15 * b(vecs_p)
 
 
-def test_embedding_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
-    """VERDICT r7 item 4: the embedding ingest loop's per-batch corpus
-    idempotency anti-join must read only the hash-bucket partitions the
-    batch touches (PartitionFilters on ``bucket=``), never the full
-    corpus id column — the partition-pruned silver pattern
-    (test_medallion::test_cross_run_dedup_is_partition_pruned) applied to
-    the vector corpus. Also pins the recorded fan-out marker and that
-    re-delivery stays idempotent under the bucketed layout."""
-    from pyspark.sql import functions as F
+def _pushed_filters(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("PushedFilters: ", 1)[1].split("]", 1)[0]
 
-    from aws_data_pipeline_spark.sources.parquet import zone_bucket_count
+
+def test_embedding_ingest_corpus_antijoin_is_range_pruned(spark, tmp_path):
+    """The embedding ingest loop's per-batch corpus idempotency anti-join
+    reads the flat corpus zone's id column through the batch's
+    ``[min, max]`` id range, pushed down to the parquet scan
+    (``PushedFilters``) where row-group statistics skip other batches'
+    files — never the unfiltered column. Also pins one flat file per
+    batch and that re-delivery stays idempotent."""
+    import glob
+
+    from aws_data_pipeline_spark.sources.parquet import pruned_zone_ids
     from aws_data_pipeline_spark.streaming.embeddings import (
-        _pruned_corpus_ids,
         incremental_embedding_ingest,
     )
 
@@ -497,46 +500,42 @@ def test_embedding_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
         [(i, vec(i)) for i in range(16)], schema
     ).write.parquet(str(inbox / "b1"))
     incremental_embedding_ingest(
-        spark, str(inbox), corpus, index, str(tmp_path / "c1"),
-        corpus_buckets=8,
+        spark, str(inbox), corpus, index, str(tmp_path / "c1")
     )
-    # the zone records its own fan-out and is hive-partitioned by bucket
-    assert zone_bucket_count(spark, corpus) == 8
+    # one flat file, no partition directories
+    assert len(glob.glob(f"{corpus}/*.parquet")) == 1
+    assert not glob.glob(f"{corpus}/*=*")
     assert {r.vec_id for r in spark.read.parquet(corpus).collect()} == set(
         range(16)
     )
 
-    # a batch touching ONE bucket prunes the corpus read to it
+    # the id read carries the batch's bounds down to the scan
     batch = spark.createDataFrame([(3, vec(3)), (11, vec(11))], schema)
-    pruned = _pruned_corpus_ids(spark, corpus, batch, 8)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters", 1)[1][:300]
-    assert "bucket" in seg
-    assert {r.vec_id for r in pruned.collect()} == {3, 11}  # bucket 3 only
+    pruned = pruned_zone_ids(spark, corpus, batch, "vec_id")
+    pushed = _pushed_filters(pruned)
+    assert "GreaterThanOrEqual(vec_id,3)" in pushed
+    assert "LessThanOrEqual(vec_id,11)" in pushed
+    assert {r.vec_id for r in pruned.collect()} == set(range(3, 12))
 
-    # idempotency under bucketing: a lost checkpoint re-delivers all
-    # files and the bucketed anti-join keeps the zone flat
+    # idempotency: a lost checkpoint re-delivers all files and the
+    # range-pruned anti-join keeps the zone flat
     incremental_embedding_ingest(
-        spark, str(inbox), corpus, index, str(tmp_path / "c2"),
-        corpus_buckets=8,
+        spark, str(inbox), corpus, index, str(tmp_path / "c2")
     )
     assert spark.read.parquet(corpus).count() == 16
 
 
-def test_text_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
-    """The text ingest loop's per-batch corpus idempotency anti-join must
-    read only the hash-bucket partitions the batch touches
-    (PartitionFilters on ``bucket=``) — the embedding loop's layout
-    (test_embedding_ingest_corpus_antijoin_is_partition_pruned) applied
-    to the document corpus. Also pins the recorded fan-out marker and
-    that checkpoint-loss re-delivery stays idempotent under bucketing."""
+def test_text_ingest_corpus_antijoin_is_range_pruned(spark, tmp_path):
+    """The text ingest loop's per-batch corpus idempotency anti-join
+    reads the flat corpus zone's id column through the batch's
+    ``[min, max]`` id range (``PushedFilters``) — the embedding loop's
+    layout (test_embedding_ingest_corpus_antijoin_is_range_pruned)
+    applied to the document corpus. Also pins one flat file per batch
+    and that checkpoint-loss re-delivery stays idempotent."""
+    import glob
     import json
 
-    from aws_data_pipeline_spark.sources.parquet import (
-        pruned_zone_ids,
-        zone_bucket_count,
-    )
+    from aws_data_pipeline_spark.sources.parquet import pruned_zone_ids
     from aws_data_pipeline_spark.streaming.corpus import (
         incremental_corpus_ingest,
     )
@@ -556,31 +555,29 @@ def test_text_ingest_corpus_antijoin_is_partition_pruned(spark, tmp_path):
     ]
     (inbox / "b1.jsonl").write_text("\n".join(json.dumps(d) for d in docs))
     incremental_corpus_ingest(
-        spark, str(inbox), corpus, index, str(tmp_path / "c1"),
-        corpus_buckets=8,
+        spark, str(inbox), corpus, index, str(tmp_path / "c1")
     )
-    # the zone records its own fan-out and is hive-partitioned by bucket
-    assert zone_bucket_count(spark, corpus) == 8
+    # one flat file, no partition directories
+    assert len(glob.glob(f"{corpus}/*.parquet")) == 1
+    assert not glob.glob(f"{corpus}/*=*")
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == set(
         range(16)
     )
 
-    # a batch touching ONE bucket prunes the corpus read to it
+    # the id read carries the batch's bounds down to the scan
     batch = spark.createDataFrame(
         [(3, "x"), (11, "y")], "doc_id long, text string"
     )
-    pruned = pruned_zone_ids(spark, corpus, batch, 8, "doc_id")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters", 1)[1][:300]
-    assert "bucket" in seg
-    assert {r.doc_id for r in pruned.collect()} == {3, 11}  # bucket 3 only
+    pruned = pruned_zone_ids(spark, corpus, batch, "doc_id")
+    pushed = _pushed_filters(pruned)
+    assert "GreaterThanOrEqual(doc_id,3)" in pushed
+    assert "LessThanOrEqual(doc_id,11)" in pushed
+    assert {r.doc_id for r in pruned.collect()} == set(range(3, 12))
 
-    # idempotency under bucketing: a lost checkpoint re-delivers all
-    # files and the bucketed anti-join keeps the zone flat
+    # idempotency: a lost checkpoint re-delivers all files and the
+    # range-pruned anti-join keeps the zone flat
     incremental_corpus_ingest(
-        spark, str(inbox), corpus, index, str(tmp_path / "c2"),
-        corpus_buckets=8,
+        spark, str(inbox), corpus, index, str(tmp_path / "c2")
     )
     assert spark.read.parquet(corpus).count() == 16
 

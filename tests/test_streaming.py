@@ -615,6 +615,10 @@ def test_corpus_crash_recovery_backfills_index(spark, tmp_path):
         [(2, fresh, "en", "a")], "doc_id long, text string, lang string, source string"
     ).write.mode("append").parquet(corpus)
     assert {r.doc for r in spark.read.parquet(f"{index}/sets").collect()} == {1}
+    # the planted row is visible to reads, so the recovery run's corpus
+    # anti-join (not an invisible file) is what keeps doc 2 from landing
+    # twice
+    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == {1, 2}
 
     # recovery: the checkpoint re-delivers batch 2 (fresh checkpoint here ≡
     # uncommitted batch). Corpus must stay flat; the index must backfill.
@@ -782,7 +786,7 @@ def test_text_ingest_start_gc_collects_superseded_versions(spark, tmp_path):
 
 def test_forget_documents_erases_text_estate(spark, sf_dir, tmp_path):
     """The text-side erasure twin: after forget_documents the doomed
-    doc_ids are gone from the LSH sets/bands and the bucketed corpus
+    doc_ids are gone from the LSH sets/bands and the flat corpus
     zone; the provenance-free k-gram index is REBUILT from the surviving
     corpus (hashes unique to doomed docs vanish, shared hashes stay — the
     rebuilt set equals a from-scratch build on survivors); an index probe
@@ -792,10 +796,7 @@ def test_forget_documents_erases_text_estate(spark, sf_dir, tmp_path):
     import os
 
     from aws_data_pipeline_spark.operators import dedup
-    from aws_data_pipeline_spark.sources.parquet import (
-        index_root,
-        record_zone_bucket_count,
-    )
+    from aws_data_pipeline_spark.sources.parquet import index_root
     from aws_data_pipeline_spark.streaming.corpus import forget_documents
 
     docs = (
@@ -805,10 +806,7 @@ def test_forget_documents_erases_text_estate(spark, sf_dir, tmp_path):
     )
     base = str(tmp_path / "textestate")
     corpus, lsh, kgram = (f"{base}/{x}" for x in ("corpus", "lsh", "kgram"))
-    record_zone_bucket_count(spark, corpus, 8)
-    docs.withColumn("bucket", F.pmod("doc_id", F.lit(8)).cast("int")).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(corpus)
+    docs.write.mode("append").parquet(corpus)
     dedup.build_lsh_text_index(docs, lsh)
     dedup.build_kgram_index(docs, kgram, k=8)
 
