@@ -328,21 +328,25 @@ def commit_index_version(spark: SparkSession, path: str, version: int) -> None:
     _create_marker(spark, f"{path}/{_PTR_DIR}", version)
 
 
-def require_flat_zone(spark: SparkSession, path: str) -> None:
-    """Refuse a zone written by the older hive-bucketed corpus layout
-    (``bucket=<i>/`` directories, fan-out in a ``path/_buckets`` marker).
-    The corpus ingests append flat files, and Spark's partition
-    discovery silently skips flat files sitting beside ``k=v``
-    directories — a mixed zone would hide rows from every read, including
-    the idempotency anti-join. Raises ``ValueError`` so the caller stops
-    before any write; rewrite such a zone flat (read it, drop ``bucket``,
-    overwrite a fresh path) before pointing an ingest at it."""
+def prepare_flat_zone(spark: SparkSession, path: str) -> None:
+    """Entry guard of every corpus-zone ingest and erase. First, refuse a
+    zone written by the older hive-bucketed corpus layout (``bucket=<i>/``
+    directories, fan-out in a ``path/_buckets`` marker): the corpus
+    ingests append flat files, and Spark's partition discovery silently
+    skips flat files sitting beside ``k=v`` directories — a mixed zone
+    would hide rows from every read, including the idempotency anti-join.
+    That raises ``ValueError`` before any write; rewrite such a zone flat
+    (read it, drop ``bucket``, overwrite a fresh path) before pointing an
+    ingest at it. Then complete an erase that crashed mid-swap
+    (:func:`complete_pending_compaction`), so the caller never reads a
+    zone whose old files are half deleted."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{_BUCKETS_DIR}")
     if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         raise ValueError(
             f"{path!r} is a bucket-partitioned zone (has {_BUCKETS_DIR}/); "
             "rewrite it flat before using it as a corpus zone"
         )
+    complete_pending_compaction(spark, path)
 
 
 def pruned_zone_ids(
@@ -356,13 +360,41 @@ def pruned_zone_ids(
     every other batch's row groups. Ingest ids arrive ordered, so each
     batch's file covers a disjoint id range and the data read stays
     O(batch) however large the zone grows (each file's footer is still
-    opened; :func:`compact_zone` keeps the file count down). An empty
-    batch yields an empty frame."""
+    opened). That holds only while files keep disjoint id ranges:
+    compact such a zone with ``compact_zone(spark, path,
+    sort_by=[id_col])``, never the unsorted branch, whose round-robin
+    files each span the whole id range and defeat the statistics;
+    :func:`erase_ids_from_flat_zone` rewrites clustered on the id for the
+    same reason. An empty batch yields an empty frame."""
     lo, hi = batch.agg(F.min(id_col), F.max(id_col)).first()
     ids = spark.read.parquet(path).select(id_col)
     if lo is None:
         return ids.limit(0)
     return ids.filter(F.col(id_col).between(lo, hi))
+
+
+def erase_ids_from_flat_zone(
+    spark: SparkSession, path: str, ids: DataFrame, id_col: str
+) -> int:
+    """Delete the rows whose ``id_col`` is in ``ids`` from a flat
+    id-keyed zone; returns the removed-row count. The survivors are
+    rewritten through the ``_compacting`` swap (:func:`clustered_rewrite`
+    on ``id_col``), so the zone directory is never truncated, nothing is
+    checkpointed into executor memory, and the rewritten files keep the
+    disjoint id ranges :func:`pruned_zone_ids` relies on. A crash during
+    the swap is completed by re-running this (the
+    :func:`prepare_flat_zone` entry guard), and a zone holding none of
+    ``ids`` is not rewritten at all. The rewrite is O(zone): the ids of a
+    flat zone name no file."""
+    prepare_flat_zone(spark, path)
+    if not zone_exists(spark, path):
+        return 0
+    cur = spark.read.parquet(path)
+    doomed = ids.select(id_col).distinct()
+    n = cur.select(id_col).join(doomed, id_col, "left_semi").count()
+    if n:
+        clustered_rewrite(cur.join(doomed, id_col, "left_anti"), path, [id_col])
+    return n
 
 
 def index_has(spark: SparkSession, path: str, sub: str) -> bool:

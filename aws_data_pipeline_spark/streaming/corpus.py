@@ -36,9 +36,10 @@ from pyspark.sql import types as T
 
 from aws_data_pipeline_spark.operators import dedup, text
 from aws_data_pipeline_spark.sources.parquet import (
+    erase_ids_from_flat_zone,
     index_has,
+    prepare_flat_zone,
     pruned_zone_ids,
-    require_flat_zone,
     zone_exists,
 )
 
@@ -220,6 +221,8 @@ def incremental_corpus_ingest(
     hash-bucketed layout (``_buckets`` marker) is refused with
     ``ValueError`` before any write: partition discovery would silently
     hide flat files appended beside its ``bucket=`` directories.
+    An erase of the zone cut short by a crash is completed first
+    (:func:`sources.parquet.prepare_flat_zone`).
 
     ``strip_markup`` / ``min_quality`` (optional, off by default): the
     curate() chain's row-local stage 0/1 applied per micro-batch BEFORE
@@ -348,7 +351,7 @@ def incremental_corpus_ingest(
                 if not full.isEmpty():
                     dedup.build_kgram_index(full, kgram_index_path, k=kgram_k)
 
-    require_flat_zone(spark, corpus_path)
+    prepare_flat_zone(spark, corpus_path)
     # run-START version GC (the embedding loop's cadence rule — see its
     # comment for why collecting right after a rebuild would be wrong)
     if gc_superseded_versions:
@@ -389,10 +392,12 @@ def forget_documents(
     maintains — the document twin of
     :func:`streaming.embeddings.forget_vectors`: remove ``ids`` from the
     MinHash-LSH index, rebuild the k-gram span index from the SURVIVING
-    corpus, rewrite the flat corpus zone last, and collect the
-    superseded index generations (they still hold the doomed rows). A
-    hash-bucketed corpus zone (``_buckets`` marker) is refused with
-    ``ValueError`` before anything is erased.
+    corpus, erase from the flat corpus zone last
+    (:func:`sources.parquet.erase_ids_from_flat_zone`: a crash-safe swap,
+    re-run to complete), and collect the superseded index generations
+    (they still hold the doomed rows). A hash-bucketed corpus zone
+    (``_buckets`` marker) is refused with ``ValueError`` before anything
+    is erased.
 
     The k-gram index stores DISTINCT hashes with no per-document
     provenance (that anonymity is its size story — see
@@ -414,7 +419,7 @@ def forget_documents(
     )
 
     if corpus_path is not None:
-        require_flat_zone(spark, corpus_path)
+        prepare_flat_zone(spark, corpus_path)
     out: dict[str, int] = {}
     doomed = ids.select(F.col(id_col).alias("doc_id")).distinct()
     if index_path is not None and index_has(spark, index_path, "sets"):
@@ -443,15 +448,10 @@ def forget_documents(
             survivors, kgram_index_path, k=meta_k, force_new_version=True
         )
         out["kgram_rebuilt"] = survivors.count()
-    if corpus_path is not None and zone_exists(spark, corpus_path):
-        # copy-on-write rewrite of the flat zone
-        cur = spark.read.parquet(corpus_path)
-        surv = cur.join(doomed, "doc_id", "left_anti").localCheckpoint(
-            eager=True
+    if corpus_path is not None:
+        out["corpus"] = erase_ids_from_flat_zone(
+            spark, corpus_path, doomed, "doc_id"
         )
-        out["corpus"] = cur.count() - surv.count()
-        if out["corpus"] > 0:
-            surv.write.mode("overwrite").parquet(corpus_path)
     if gc_superseded:
         for p, subs in (
             (index_path, ("sets", "bands", "meta")),

@@ -37,9 +37,10 @@ from pyspark.sql import types as T
 
 from aws_data_pipeline_spark.operators import dedup, similarity
 from aws_data_pipeline_spark.sources.parquet import (
+    erase_ids_from_flat_zone,
     index_has,
+    prepare_flat_zone,
     pruned_zone_ids,
-    require_flat_zone,
     zone_exists,
 )
 
@@ -102,6 +103,8 @@ def incremental_embedding_ingest(
     (``_buckets`` marker) is refused with ``ValueError`` before any
     write: partition discovery would silently hide flat files appended
     beside its ``bucket=`` directories.
+    An erase of the zone cut short by a crash is completed first
+    (:func:`sources.parquet.prepare_flat_zone`).
 
     ``pq_index_path`` extends the same upkeep to the PQ index (the third
     embedding index family): appends encode under the index's STORED
@@ -268,7 +271,7 @@ def incremental_embedding_ingest(
                         max_train=pq_max_train,
                     )
 
-    require_flat_zone(spark, corpus_path)
+    prepare_flat_zone(spark, corpus_path)
     # version GC runs at the START of a run, never right after this run's
     # own retrains: finish_index_build deliberately keeps the
     # immediately-superseded generation for readers that resolved their
@@ -373,12 +376,15 @@ def forget_vectors(
     decides what is "new"), so erasing it first and crashing before the
     index deletes would let a re-delivered vector re-enter the corpus
     while stale index rows still advertise the old one. Every step is
-    idempotent (anti-joins / partition-pruned rewrites of absent ids are
-    no-ops), so a crash anywhere re-runs to completion.
+    idempotent (anti-joins / rewrites of absent ids are no-ops), so a
+    crash anywhere re-runs to completion.
 
-    The corpus zone is rewritten copy-on-write, and only when a doomed
-    id is present. A hash-bucketed corpus zone (``_buckets`` marker) is
-    refused with ``ValueError`` before anything is erased.
+    The corpus zone is erased by
+    :func:`sources.parquet.erase_ids_from_flat_zone`: the survivors are
+    rewritten through the ``_compacting`` swap, only when a doomed id is
+    present, and a swap cut short by a crash is completed on the next
+    run. A hash-bucketed corpus zone (``_buckets`` marker) is refused
+    with ``ValueError`` before anything is erased.
 
     Returns per-surface deleted-row counts for the erasure audit log."""
     from aws_data_pipeline_spark.sources.parquet import (
@@ -388,7 +394,7 @@ def forget_vectors(
     )
 
     if corpus_path is not None:
-        require_flat_zone(spark, corpus_path)
+        prepare_flat_zone(spark, corpus_path)
     out: dict[str, int] = {}
     doomed = ids.select(F.col(id_col).alias("vec_id")).distinct()
     if index_path is not None and index_has(spark, index_path, "vectors"):
@@ -458,13 +464,8 @@ def forget_vectors(
         ):
             if p is not None and zone_exists(spark, p):
                 gc_index_versions(spark, p, subs)
-    if corpus_path is not None and zone_exists(spark, corpus_path):
-        # copy-on-write rewrite of the flat zone
-        cur = spark.read.parquet(corpus_path)
-        surv = cur.join(doomed, "vec_id", "left_anti").localCheckpoint(
-            eager=True
+    if corpus_path is not None:
+        out["corpus"] = erase_ids_from_flat_zone(
+            spark, corpus_path, doomed, "vec_id"
         )
-        out["corpus"] = cur.count() - surv.count()
-        if out["corpus"] > 0:
-            surv.write.mode("overwrite").parquet(corpus_path)
     return out

@@ -170,3 +170,58 @@ def test_bucketed_corpus_zone_is_refused(spark, tmp_path):
     assert tree() == before
     assert not (tmp_path / "ck").exists()
     assert not (tmp_path / "index").exists()
+
+
+@pytest.mark.parametrize(
+    "forget, id_col",
+    [(forget_documents, "doc_id"), (forget_vectors, "vec_id")],
+    ids=["forget_documents", "forget_vectors"],
+)
+def test_forget_completes_an_interrupted_corpus_erase(
+    spark, tmp_path, monkeypatch, forget, id_col
+):
+    """The corpus erase rewrites survivors through the ``_compacting``
+    swap, never a truncating overwrite. A crash after the new files are
+    complete (marker written) and part-way through deleting the old ones
+    leaves a zone that reads short; re-running forget completes the swap
+    to exactly the survivors. A forget whose ids are all absent rewrites
+    nothing."""
+    from aws_data_pipeline_spark.sources import parquet as P
+
+    corpus = str(tmp_path / "corpus")
+    schema = f"{id_col} long, text string"
+    for lo in (0, 50):  # two ingest-style batches: two flat files
+        spark.createDataFrame(
+            [(i, f"t{i}") for i in range(lo, lo + 50)], schema
+        ).coalesce(1).write.mode("append").parquet(corpus)
+    olds = sorted(_data_files(corpus))
+    doomed = spark.createDataFrame([(3,), (77,)], f"{id_col} long")
+    want = set(range(100)) - {3, 77}
+
+    def crash(spark, path):
+        raise RuntimeError("crash after the swap marker")
+
+    monkeypatch.setattr(P, "_finish_compaction_swap", crash)
+    with pytest.raises(RuntimeError, match="crash after"):
+        forget(spark, doomed, corpus_path=corpus)
+    monkeypatch.undo()
+    # the live zone is untouched until the marker's swap runs ...
+    assert sorted(_data_files(corpus)) == olds
+    # ... which now dies after deleting one old file: the zone reads short
+    os.remove(os.path.join(corpus, olds[0]))
+    assert spark.read.parquet(corpus).count() == 50
+
+    assert forget(spark, doomed, corpus_path=corpus)["corpus"] == 0
+    assert not os.path.exists(os.path.join(corpus, "_compacting"))
+    got = [r[0] for r in spark.read.parquet(corpus).select(id_col).collect()]
+    assert sorted(got) == sorted(want)
+
+    # ids absent from the zone: no rewrite, the files stay as they are
+    files = sorted(_data_files(corpus))
+    assert forget(spark, doomed, corpus_path=corpus)["corpus"] == 0
+    assert sorted(_data_files(corpus)) == files
+    # an uninterrupted erase counts what it removed
+    one = spark.createDataFrame([(50,), (3,)], f"{id_col} long")
+    assert forget(spark, one, corpus_path=corpus)["corpus"] == 1
+    got = [r[0] for r in spark.read.parquet(corpus).select(id_col).collect()]
+    assert sorted(got) == sorted(want - {50})
